@@ -76,7 +76,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r22 negative result: the blocked-bank Arrow/numpy kernel that won on
     every other all-pairs witness (bitext/maxsim/dbscan/silhouette/ece —
-    see _PAIR_BANK) measured a WASH-to-slight-LOSS here (interleaved A/B
+    see _blocked_pairs) measured a WASH-to-slight-LOSS here (interleaved A/B
     at sf0.1: HOF min 0.923 s vs blocked 1.014 s): the pair volume is
     only queries×corpus with ONE 64-dim fold per pair, so the two bank
     shuffles + Arrow round-trip exceed the interpreted-expression cost
@@ -97,7 +97,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster's cores regardless of input file layout; the 2000-row
     # exchange at sf0.1 is noise next to the scoring it parallelizes
     # (interleaved A/B min: sf0.1 0.814 -> 0.624 s, sf1 with 10-file
-    # layout 4.154 -> 2.300 s; scripts/ab_topk_repart_r22.py).
+    # layout 4.154 -> 2.300 s; the A/B script is removed, see git history).
     scored = (
         emb.repartition(spark.sparkContext.defaultParallelism)
         .join(broadcast(queries), F.col("vec_id") != F.col("query_id"))
@@ -924,19 +924,7 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MS_SUBS = 8  # sub-vectors per embedding (64 dims -> 8 x 8)
 _MS_TOPK = 3
 
-# Vectors per bank for the blocked pair kernels below (r22, guide §4.2).
-# The brute-force pair witnesses (maxsim, bitext) used to evaluate their
-# cosine kernels as Catalyst higher-order folds on the pair-expanded
-# join output — ~10-150 µs of interpreted expression tree PER PAIR. The
-# blocked form groups each side into _PAIR_BANK-vector banks, cross-joins
-# the (tiny) bank tables and hands each bank pair to one Arrow/numpy
-# kernel call: every vector crosses the Python boundary n_other/_PAIR_BANK
-# times instead of n_other times (the r21 pair-expanded Arrow rewrite was
-# a wash for exactly that reason), and the per-pair kernel cost drops to
-# a vectorized multiply-add. The kernels replay the JVM fold's IEEE op
-# sequence exactly (see _np_fold_dot), so snapped outputs stay
-# bit-identical to the expression form — pinned by
-# tests/test_similarity_recall.py::test_blocked_pair_kernels_match_jvm_fold.
+# Vectors per bank for the blocked pair kernels (see _blocked_pairs).
 _PAIR_BANK = 256
 
 
@@ -973,95 +961,148 @@ def _np_fold_norm(A):
     return np.sqrt(_np_fold_sq(A))
 
 
-def _np_bank(rows):
-    """(ids, matrix) from an Arrow bank of (vec_id, embedding) structs;
-    float32 parquet values widen exactly to float64."""
+def _np_bank(rows, labeled):
+    """(ids, labels or None, matrix) from an Arrow bank of
+    (vec_id, [label,] embedding) structs; float32 parquet values widen
+    exactly to float64."""
     import numpy as np
 
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    M = np.array([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    return ids, M
-
-
-def _np_labeled_bank(rows):
-    """(ids, labels, matrix) from an Arrow bank of
-    (vec_id, label, embedding) structs."""
-    import numpy as np
-
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    labels = np.array([r["label"] for r in rows], dtype=np.int64)
+    labels = np.array([r["label"] for r in rows], dtype=np.int64) if labeled else None
     M = np.array([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
     return ids, labels, M
 
 
-def _cross_banks(spark, left_banks, right_banks, kernel, schema, cond=None):
-    """crossJoin the two (tiny) bank tables, spread bank pairs
-    round-robin over the session's cores (bank-pair rows are few and
-    uniform-cost; hash placement would be Poisson-unbalanced — the r21
-    minhash A/B), and run the numpy kernel per pair."""
-    joined = (
-        left_banks.join(right_banks, cond)
-        if cond is not None
-        else left_banks.crossJoin(right_banks)
-    )
+def _cos6(A, B):
+    """Pair cosines snapped to micro-units: the HOF form's
+    floor(dot / greatest(na*nb, 1e-12) * 1e6 + 0.5)."""
+    import numpy as np
+
+    nrm = np.multiply.outer(_np_fold_norm(A), _np_fold_norm(B))
+    return np.floor(
+        _np_fold_dot(A, B) / np.maximum(nrm, 1e-12) * 1e6 + 0.5
+    ).astype(np.int64)
+
+
+def _d6(A, B):
+    """Squared-L2 pair distances snapped to micro-units: the HOF form's
+    floor((sqa + sqb - 2*dot) * 1e6 + 0.5)."""
+    import numpy as np
+
+    sq = np.add.outer(_np_fold_sq(A), _np_fold_sq(B))
+    return np.floor((sq - 2 * _np_fold_dot(A, B)) * 1e6 + 0.5).astype(np.int64)
+
+
+def _blocked_pairs(spark, left, right, score, schema, roles, keep=None, upper=False):
+    """Score every cross pair of two vector frames with blocked
+    Arrow/numpy kernels: the one scaffold behind the brute-force pair
+    witnesses (maxsim, bitext, calibration_ece, dbscan, silhouette).
+
+    A Catalyst higher-order fold costs ~10-150 µs of interpreted
+    expression tree PER PAIR, and a pair-expanded Arrow kernel ships
+    both vectors once per pair (a wash). Here each side is grouped into
+    banks of ``width`` contiguous vec_ids, the tiny bank tables are
+    joined, bank pairs are spread round-robin over the session's cores
+    (few, uniform-cost rows; hash placement would be Poisson-unbalanced)
+    and one numpy call scores each bank pair, so every vector crosses
+    the Python boundary once per opposing bank.
+
+    Contract: ``score(A, B)`` returns the int64 [|A|, |B|] matrix of
+    snapped scores, with folds in the JVM's IEEE op order
+    (_np_fold_dot / _np_fold_sq / _np_fold_norm, never a BLAS matmul),
+    so outputs are bit-identical to the HOF expression form (pinned by
+    tests/test_similarity_recall.py's test_blocked_*_match_jvm_fold).
+
+    ``left`` / ``right`` are ``(frame, width)``; ``right=None`` pairs the
+    left banks with themselves via one bank table, lazily checkpointed
+    so both join sides share one scan+agg. ``upper`` joins on
+    ``blk_a <= blk_b`` instead of crossing: banks are contiguous id
+    ranges, so each ida < idb pair lives in exactly one kept bank pair.
+    ``keep(ida, idb, s)`` is an optional in-kernel bool mask, so only
+    survivors cross back over Arrow. ``schema`` names the output columns
+    and ``roles`` each one's source: ``id_a``, ``id_b``, ``label_a``,
+    ``label_b`` or ``score``; labels are decoded only when a role names
+    one, and an ``int`` column is emitted as int32.
+    """
+    import numpy as np
+    import pandas as pd
+
+    fields = [f.split() for f in schema.split(",")]
+    labeled = any(r.startswith("label") for r in roles)
+    cols = ["vec_id", "label", "embedding"] if labeled else ["vec_id", "embedding"]
+
+    def banks(frame, width):
+        return frame.groupBy(F.expr(f"vec_id DIV {width}").alias("blk")).agg(
+            F.collect_list(F.struct(*cols)).alias("bank")
+        )
+
+    def side(t, s):
+        return t.select(
+            F.col("blk").alias(f"blk_{s}"), F.col("bank").alias(f"bank_{s}")
+        )
+
+    if right is None:
+        shared = banks(*left).localCheckpoint(eager=False)
+        a, b = side(shared, "a"), side(shared, "b")
+    else:
+        a, b = side(banks(*left), "a"), side(banks(*right), "b")
+    joined = a.join(b, F.col("blk_a") <= F.col("blk_b")) if upper else a.crossJoin(b)
+
+    def kernel(it):
+        for pdf in it:
+            for bank_a, bank_b in zip(pdf["bank_a"], pdf["bank_b"]):
+                ida, la, A = _np_bank(bank_a, labeled)
+                idb, lb, B = _np_bank(bank_b, labeled)
+                s = score(A, B)
+                m = None if keep is None else keep(ida, idb, s)
+                # per-pair views over the score grid; only the columns a
+                # role names are materialized (row-major, masked by m)
+                grid = {
+                    "score": s,
+                    "id_a": np.broadcast_to(ida[:, None], s.shape),
+                    "id_b": np.broadcast_to(idb, s.shape),
+                }
+                if labeled:
+                    grid["label_a"] = np.broadcast_to(la[:, None], s.shape)
+                    grid["label_b"] = np.broadcast_to(lb, s.shape)
+                yield pd.DataFrame(
+                    {
+                        name: (
+                            grid[role].ravel() if m is None else grid[role][m]
+                        ).astype(np.int32 if typ == "int" else np.int64, copy=False)
+                        for (name, typ), role in zip(fields, roles)
+                    }
+                )
+
     return joined.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
         kernel, schema
     )
 
 
-def _maxsim_scored(spark: SparkSession, emb: DataFrame) -> DataFrame:
-    """(query_id, vec_id, score6) for every query×corpus pair (self-pairs
-    included — callers filter) via the blocked-bank kernel; score6 is
-    bit-identical to the per-pair HOF expression form (pinned in
-    tests/test_similarity_recall.py::test_blocked_pair_kernels_match_jvm_fold).
-    """
+def _maxsim6(Q, D):
+    """MaxSim in micro-units: Σ_i max_j cos6(q_i, d_j) over the 8-dim
+    sub-vectors — integer max and sum, so reduction order cannot
+    matter."""
     import numpy as np
-    import pandas as pd
+    from functools import reduce
 
-    bank = F.collect_list(F.struct("vec_id", "embedding"))
-    d_banks = emb.groupBy(
-        F.expr(f"vec_id DIV {_PAIR_BANK}").alias("blk_d")
-    ).agg(bank.alias("bank_d"))
-    q_banks = (
-        emb.where(F.col("vec_id") % 100 == 0)
-        .groupBy(F.expr(f"vec_id DIV {100 * _PAIR_BANK}").alias("blk_q"))
-        .agg(bank.alias("bank_q"))
+    subs = [slice(i * 8, i * 8 + 8) for i in range(_MS_SUBS)]
+    return sum(
+        reduce(np.maximum, (_cos6(Q[:, qs], D[:, ds]) for ds in subs))
+        for qs in subs
     )
 
-    def _maxsim_blocks(it):
-        for pdf in it:
-            for bank_q, bank_d in zip(pdf["bank_q"], pdf["bank_d"]):
-                idq, Q = _np_bank(bank_q)
-                idd, D = _np_bank(bank_d)
-                qn = [_np_fold_norm(Q[:, i * 8 : i * 8 + 8]) for i in range(_MS_SUBS)]
-                dn = [_np_fold_norm(D[:, j * 8 : j * 8 + 8]) for j in range(_MS_SUBS)]
-                total = np.zeros((len(idq), len(idd)), dtype=np.int64)
-                for i in range(_MS_SUBS):
-                    best = None
-                    for j in range(_MS_SUBS):
-                        s6 = np.floor(
-                            _np_fold_dot(
-                                Q[:, i * 8 : i * 8 + 8], D[:, j * 8 : j * 8 + 8]
-                            )
-                            / np.maximum(
-                                np.multiply.outer(qn[i], dn[j]), 1e-12
-                            )
-                            * 1e6
-                            + 0.5
-                        ).astype(np.int64)
-                        best = s6 if best is None else np.maximum(best, s6)
-                    total += best
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(idq, len(idd)),
-                        "vec_id": np.tile(idd, len(idq)),
-                        "score6": total.ravel(),
-                    }
-                )
 
-    return _cross_banks(
-        spark, q_banks, d_banks, _maxsim_blocks,
+def _maxsim_scored(spark: SparkSession, emb: DataFrame) -> DataFrame:
+    """(query_id, vec_id, score6) for every query×corpus pair (self-pairs
+    included — callers filter)."""
+    return _blocked_pairs(
+        spark,
+        (emb.where(F.col("vec_id") % 100 == 0), 100 * _PAIR_BANK),
+        (emb, _PAIR_BANK),
+        _maxsim6,
         "query_id bigint, vec_id bigint, score6 bigint",
+        ("id_a", "id_b", "score"),
     )
 
 
@@ -1083,14 +1124,8 @@ def q_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the similarity_topk brute shape — the oracle-checkable witness); at
     100 TB candidate generation swaps to the ANN paths above and MaxSim
     re-scores candidates only, which is precisely ColBERT's two-stage
-    serving design. Per-pair cost (r22, guide §4.2 — see _PAIR_BANK):
-    the 8×8 sub-cosine kernel runs as a blocked Arrow/numpy pass over
-    bank pairs — the previous per-pair Catalyst HOF expression cost
-    ~150 µs/pair interpreted, and the r21 pair-expanded pandas rewrite
-    was a wash because both vectors crossed the Arrow boundary once PER
-    PAIR; banks ship each vector once per opposing bank instead. The
-    kernel replays the HOF fold's IEEE op order, so score6 is
-    bit-identical (pinned in tests/test_similarity_recall.py)."""
+    serving design. The 8×8 sub-cosine kernel runs in the blocked
+    bank seam (_blocked_pairs)."""
     from pyspark.sql import Window
 
     scored = (
@@ -1119,53 +1154,15 @@ _BITEXT_TAU = 1.0  # keep pairs whose margin beats the kNN mean
 
 
 def _bitext_pairs(spark: SparkSession, emb: DataFrame) -> DataFrame:
-    """All cross-side (src_id, tgt_id, c6) cosine pairs via the blocked
-    bank kernel (r22, guide §4.2 — see _PAIR_BANK): each side grouped
-    into ≤_PAIR_BANK-vector banks keyed by contiguous id range, bank
-    pairs crossed and scored in one numpy pass. The c6 snap is the exact
-    expression the HOF form computed —
-    floor(dot / greatest(na*nb, 1e-12) * 1e6 + 0.5) — with dot/norm
-    folds replayed in the JVM's IEEE op order (_np_fold_dot), so the
-    pair table is bit-identical to the expression form (pinned in
-    tests/test_similarity_recall.py::test_blocked_pair_kernels_match_jvm_fold).
-    """
-    import numpy as np
-    import pandas as pd
-
+    """All cross-side (src_id, tgt_id, c6) cosine pairs."""
     side = F.col("vec_id") % 2
-    blk = F.expr(f"vec_id DIV {2 * _PAIR_BANK}")
-    bank = F.collect_list(F.struct("vec_id", "embedding"))
-    a_banks = (
-        emb.where(side == 0).groupBy(blk.alias("blk_a")).agg(bank.alias("bank_a"))
-    )
-    b_banks = (
-        emb.where(side == 1).groupBy(blk.alias("blk_b")).agg(bank.alias("bank_b"))
-    )
-
-    def _c6_blocks(it):
-        for pdf in it:
-            for bank_a, bank_b in zip(pdf["bank_a"], pdf["bank_b"]):
-                ida, A = _np_bank(bank_a)
-                idb, B = _np_bank(bank_b)
-                na = _np_fold_norm(A)
-                nb = _np_fold_norm(B)
-                c6 = np.floor(
-                    _np_fold_dot(A, B)
-                    / np.maximum(np.multiply.outer(na, nb), 1e-12)
-                    * 1e6
-                    + 0.5
-                ).astype(np.int64)
-                yield pd.DataFrame(
-                    {
-                        "src_id": np.repeat(ida, len(idb)),
-                        "tgt_id": np.tile(idb, len(ida)),
-                        "c6": c6.ravel(),
-                    }
-                )
-
-    return _cross_banks(
-        spark, a_banks, b_banks, _c6_blocks,
+    return _blocked_pairs(
+        spark,
+        (emb.where(side == 0), 2 * _PAIR_BANK),
+        (emb.where(side == 1), 2 * _PAIR_BANK),
+        _cos6,
         "src_id bigint, tgt_id bigint, c6 bigint",
+        ("id_a", "id_b", "score"),
     )
 
 
@@ -1916,6 +1913,19 @@ _ECE_K = 10  # kNN votes per query — bins are the 11 discrete posteriors
 _ECE_QMOD = 20  # every 20th vector is a held-out query (5% sample)
 
 
+def _ece_pairs(spark: SparkSession, emb: DataFrame) -> DataFrame:
+    """(query_id, qlabel, label, vec_id, c6) cosines of every held-out
+    query against the corpus (self-pairs included — the caller filters)."""
+    return _blocked_pairs(
+        spark,
+        (emb.where(F.col("vec_id") % _ECE_QMOD == 0), _ECE_QMOD * _PAIR_BANK),
+        (emb, _PAIR_BANK),
+        _cos6,
+        "query_id bigint, qlabel int, label int, vec_id bigint, c6 bigint",
+        ("id_a", "label_a", "label_b", "id_b", "score"),
+    )
+
+
 def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability table / expected-calibration-error input (Naeini et
     al. 2015; Guo et al. 2017) for a kNN classifier on the embedding
@@ -1935,50 +1945,9 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is an 11-row aggregate. Production swaps the brute scorer for
     an ANN candidate generator, identical tail.
     """
-    import numpy as np
-    import pandas as pd
-
-    emb = load(spark, sf_dir, "embeddings")
-    # blocked-bank kernel (r22, guide §4.2 — see _PAIR_BANK); the c6
-    # snap replays the HOF fold's IEEE op order, bit-identical (pinned
-    # in tests/test_similarity_recall.py)
-    bank = F.collect_list(F.struct("vec_id", "label", "embedding"))
-    d_banks = emb.groupBy(
-        F.expr(f"vec_id DIV {_PAIR_BANK}").alias("blk_d")
-    ).agg(bank.alias("bank_d"))
-    q_banks = (
-        emb.where(F.col("vec_id") % _ECE_QMOD == 0)
-        .groupBy(F.expr(f"vec_id DIV {_ECE_QMOD * _PAIR_BANK}").alias("blk_q"))
-        .agg(bank.alias("bank_q"))
+    scored = _ece_pairs(spark, load(spark, sf_dir, "embeddings")).where(
+        F.col("vec_id") != F.col("query_id")
     )
-
-    def _ece_blocks(it):
-        for pdf in it:
-            for bank_q, bank_d in zip(pdf["bank_q"], pdf["bank_d"]):
-                idq, qlbl, Q = _np_labeled_bank(bank_q)
-                idd, lbl, D = _np_labeled_bank(bank_d)
-                qn = _np_fold_norm(Q)
-                dn = _np_fold_norm(D)
-                c6 = np.floor(
-                    _np_fold_dot(Q, D)
-                    / np.maximum(np.multiply.outer(qn, dn), 1e-12)
-                    * 1e6
-                    + 0.5
-                ).astype(np.int64)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(idq, len(idd)),
-                        "qlabel": np.repeat(qlbl, len(idd)).astype(np.int32),
-                        "label": np.tile(lbl, len(idq)).astype(np.int32),
-                        "vec_id": np.tile(idd, len(idq)),
-                        "c6": c6.ravel(),
-                    }
-                )
-
-    scored = _cross_banks(
-        spark, q_banks, d_banks, _ece_blocks,
-        "query_id bigint, qlabel int, label int, vec_id bigint, c6 bigint",
-    ).where(F.col("vec_id") != F.col("query_id"))
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(F.col("c6").desc(), "vec_id")
@@ -2294,52 +2263,19 @@ _DBSCAN_MINPTS = 3  # neighbors (excluding self) to qualify as core
 
 
 def _dbscan_pairs(spark: SparkSession, emb3: DataFrame) -> DataFrame:
-    """Eps-surviving (ida, idb, d6) squared-L2 pairs (ida < idb) via the
-    blocked bank kernel (r22, guide §4.2 — see _PAIR_BANK). The d6 snap —
-    floor((sqa + sqb - 2*dot) * 1e6 + 0.5) — replays the HOF fold's IEEE
-    op order (pinned in tests/test_similarity_recall.py); the eps filter
-    is an integer compare, applied in-kernel so only surviving pairs
-    cross the Arrow boundary. blk_a <= blk_b halves the bank pairs
-    (banks are contiguous id ranges, so every ida < idb pair lives in
-    exactly one kept bank pair)."""
+    """Eps-surviving (ida, idb, d6) squared-L2 pairs (ida < idb); the eps
+    filter is an integer compare, applied in-kernel."""
     import numpy as np
-    import pandas as pd
 
-    bank = F.collect_list(F.struct("vec_id", "embedding"))
-    blk = F.expr(f"vec_id DIV {3 * _PAIR_BANK}")
-    # one scan+agg shared by both join sides (§2.4 — lazy: the single
-    # downstream action materializes it once)
-    banks = emb3.groupBy(blk.alias("blk")).agg(bank.alias("bank")).localCheckpoint(
-        eager=False
-    )
-    a_banks = banks.select(F.col("blk").alias("blk_a"), F.col("bank").alias("bank_a"))
-    b_banks = banks.select(F.col("blk").alias("blk_b"), F.col("bank").alias("bank_b"))
-
-    def _d6_blocks(it):
-        for pdf in it:
-            for bank_a, bank_b in zip(pdf["bank_a"], pdf["bank_b"]):
-                ida, A = _np_bank(bank_a)
-                idb, B = _np_bank(bank_b)
-                sqa = _np_fold_sq(A)
-                sqb = _np_fold_sq(B)
-                d6 = np.floor(
-                    (np.add.outer(sqa, sqb) - 2 * _np_fold_dot(A, B)) * 1e6
-                    + 0.5
-                ).astype(np.int64)
-                keep = (np.less.outer(ida, idb)) & (d6 <= _DBSCAN_EPS6)
-                ii, jj = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "ida": ida[ii],
-                        "idb": idb[jj],
-                        "d6": d6[ii, jj],
-                    }
-                )
-
-    return _cross_banks(
-        spark, a_banks, b_banks, _d6_blocks,
+    return _blocked_pairs(
+        spark,
+        (emb3, 3 * _PAIR_BANK),
+        None,
+        _d6,
         "ida bigint, idb bigint, d6 bigint",
-        cond=F.col("blk_a") <= F.col("blk_b"),
+        ("id_a", "id_b", "score"),
+        keep=lambda ida, idb, d6: np.less.outer(ida, idb) & (d6 <= _DBSCAN_EPS6),
+        upper=True,
     )
 
 
@@ -2557,48 +2493,18 @@ _SIL_MOD = 4  # deterministic sample: vec_id % 4 == 0 (pairs are O(n²))
 
 
 def _sil_pairs(spark: SparkSession, emb4: DataFrame) -> DataFrame:
-    """Labeled (ida, la, lb, d6) squared-L2 pairs (ida != idb) via the
-    blocked bank kernel (r22, guide §4.2 — see _PAIR_BANK): d6 is the
-    DBSCAN spelling replayed in the HOF fold's IEEE op order (pinned in
-    tests/test_similarity_recall.py); the ida != idb predicate becomes
-    an in-kernel mask."""
+    """Labeled (ida, la, lb, d6) squared-L2 pairs (ida != idb, an
+    in-kernel mask)."""
     import numpy as np
-    import pandas as pd
 
-    bank = F.collect_list(F.struct("vec_id", "label", "embedding"))
-    blk = F.expr(f"vec_id DIV {_SIL_MOD * _PAIR_BANK}")
-    # one scan+agg shared by both join sides (§2.4 — lazy: the single
-    # downstream action materializes it once)
-    banks = emb4.groupBy(blk.alias("blk")).agg(bank.alias("bank")).localCheckpoint(
-        eager=False
-    )
-    a_banks = banks.select(F.col("blk").alias("blk_a"), F.col("bank").alias("bank_a"))
-    b_banks = banks.select(F.col("blk").alias("blk_b"), F.col("bank").alias("bank_b"))
-
-    def _sil_blocks(it):
-        for pdf in it:
-            for bank_a, bank_b in zip(pdf["bank_a"], pdf["bank_b"]):
-                ida, la, A = _np_labeled_bank(bank_a)
-                idb, lb, B = _np_labeled_bank(bank_b)
-                sqa = _np_fold_sq(A)
-                sqb = _np_fold_sq(B)
-                d6 = np.floor(
-                    (np.add.outer(sqa, sqb) - 2 * _np_fold_dot(A, B)) * 1e6
-                    + 0.5
-                ).astype(np.int64)
-                ii, jj = np.nonzero(np.not_equal.outer(ida, idb))
-                yield pd.DataFrame(
-                    {
-                        "ida": ida[ii],
-                        "la": la[ii],
-                        "lb": lb[jj],
-                        "d6": d6[ii, jj],
-                    }
-                )
-
-    return _cross_banks(
-        spark, a_banks, b_banks, _sil_blocks,
+    return _blocked_pairs(
+        spark,
+        (emb4, _SIL_MOD * _PAIR_BANK),
+        None,
+        _d6,
         "ida bigint, la bigint, lb bigint, d6 bigint",
+        ("id_a", "label_a", "label_b", "score"),
+        keep=lambda ida, idb, d6: np.not_equal.outer(ida, idb),
     )
 
 

@@ -46,18 +46,11 @@ class Message(Generic[T]):
 
 
 class _QueueSender:
-    def __init__(self, q: queue.Queue, cancelled: threading.Event | None = None):
+    def __init__(self, q: queue.Queue):
         self._q = q
-        self._cancelled = cancelled or threading.Event()
 
     def send(self, msg: Message) -> None:
-        while True:
-            try:
-                self._q.put(msg, timeout=0.05)
-                return
-            except queue.Full:
-                if self._cancelled.is_set():
-                    raise NotConnected("channel cancelled while blocked on send")
+        self._q.put(msg)
 
 
 class OutputPort(Generic[T]):
@@ -74,6 +67,9 @@ class OutputPort(Generic[T]):
         self._queues.append(q)
 
     def send(self, msg: Message | Any) -> None:
+        """Blocks while a connected channel is full (backpressure). A
+        stage's dismissal is observed between units, by its work loop,
+        not while blocked here on a full channel."""
         if not isinstance(msg, Message):
             msg = Message(msg)
         if not self._senders:
@@ -113,11 +109,9 @@ class InputPort(Generic[T]):
         while True:
             remaining = None if deadline is None else max(0.0, deadline - time.monotonic())
             try:
-                msg = self._q.get(timeout=remaining if remaining is not None else 0.1)
+                msg = self._q.get(timeout=remaining)
             except queue.Empty:
-                if deadline is not None and time.monotonic() >= deadline:
-                    raise TimeoutError("recv timed out")
-                continue
+                raise TimeoutError("recv timed out")
             if msg.payload is _SENTINEL:
                 self._ended_producers += 1
                 if self._ended_producers >= self._producers:

@@ -293,7 +293,7 @@ def test_jl_projection_distortion_centers_on_one(spark, sf_dir):
 
 def test_blocked_pair_kernels_match_jvm_fold(spark, sf_dir):
     """r22 §4.2 pin: the blocked Arrow/numpy pair kernels (_bitext_pairs,
-    _maxsim_scored) must be BIT-IDENTICAL to the Catalyst HOF expression
+    _ece_pairs, _maxsim_scored) must be BIT-IDENTICAL to the Catalyst HOF expression
     forms they replaced — the numpy code replays the JVM fold's IEEE op
     sequence (sequential per-dim multiply-add, _np_fold_dot), so the
     floor(x*1e6 + 0.5) snaps cannot diverge. exceptAll both ways over
@@ -340,6 +340,40 @@ def test_blocked_pair_kernels_match_jvm_fold(spark, sf_dir):
     blocked = S._bitext_pairs(spark, emb)
     assert blocked.exceptAll(hof_pairs).count() == 0
     assert hof_pairs.exceptAll(blocked).count() == 0
+
+    # --- calibration_ece labeled pair table: HOF expression form (every
+    # _ECE_QMOD-th vector against the corpus, self-pairs excluded by the
+    # join predicate; filter the kernel frame the same way)
+    lv = emb.select("vec_id", "label", as_double.alias("vec"), norm.alias("norm"))
+    q = lv.where(F.col("vec_id") % S._ECE_QMOD == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("qlabel"),
+        F.col("vec").alias("va"),
+        F.col("norm").alias("na"),
+    )
+    d = lv.select(
+        "vec_id",
+        "label",
+        F.col("vec").alias("vb"),
+        F.col("norm").alias("nb"),
+    )
+    hof_ece = d.join(broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        "qlabel",
+        "label",
+        "vec_id",
+        F.floor(
+            dot / F.greatest(F.col("na") * F.col("nb"), F.lit(1e-12)) * 1e6
+            + F.lit(0.5)
+        )
+        .cast("bigint")
+        .alias("c6"),
+    )
+    blocked_ece = S._ece_pairs(spark, emb).where(
+        F.col("vec_id") != F.col("query_id")
+    )
+    assert blocked_ece.exceptAll(hof_ece).count() == 0
+    assert hof_ece.exceptAll(blocked_ece).count() == 0
 
     # --- maxsim scored frame: HOF expression form (self-pairs excluded
     # by the join predicate; filter the kernel frame the same way)
