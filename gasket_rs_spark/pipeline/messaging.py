@@ -45,26 +45,17 @@ class Message(Generic[T]):
     payload: T
 
 
-class _QueueSender:
-    def __init__(self, q: queue.Queue):
-        self._q = q
-
-    def send(self, msg: Message) -> None:
-        self._q.put(msg)
-
-
 class OutputPort(Generic[T]):
-    """messaging.rs:40-69: send() into the connected channel; error if not
-    connected; len() exposes the queue depth."""
+    """messaging.rs:40-69: send() into the connected channels; error if
+    not connected; len() exposes the deepest channel's depth. A channel
+    is a bounded ``queue.Queue`` or a ``_BroadcastRing`` (put/qsize)."""
 
     def __init__(self, schema: Any = None):
         self.schema = schema
-        self._senders: list[_QueueSender] = []
-        self._queues: list[queue.Queue] = []
+        self._channels: list[queue.Queue | _BroadcastRing] = []
 
-    def connect(self, sender: _QueueSender, q: queue.Queue) -> None:
-        self._senders.append(sender)
-        self._queues.append(q)
+    def connect(self, channel: queue.Queue | _BroadcastRing) -> None:
+        self._channels.append(channel)
 
     def send(self, msg: Message | Any) -> None:
         """Blocks while a connected channel is full (backpressure). A
@@ -72,17 +63,17 @@ class OutputPort(Generic[T]):
         not while blocked here on a full channel."""
         if not isinstance(msg, Message):
             msg = Message(msg)
-        if not self._senders:
+        if not self._channels:
             raise NotConnected("output port is not connected")
-        for s in self._senders:
-            s.send(msg)
+        for ch in self._channels:
+            ch.put(msg)
 
     def close(self) -> None:
-        for s in self._senders:
-            s.send(Message(_SENTINEL))
+        for ch in self._channels:
+            ch.put(Message(_SENTINEL))
 
     def __len__(self) -> int:
-        return max((q.qsize() for q in self._queues), default=0)
+        return max((ch.qsize() for ch in self._channels), default=0)
 
 
 class InputPort(Generic[T]):
@@ -134,7 +125,7 @@ def connect_ports(output: OutputPort, input_: InputPort, cap: int) -> None:
     """1:1 edge over a bounded channel (messaging.rs:404-411)."""
     _check_types(output, input_)
     q: queue.Queue = queue.Queue(maxsize=cap)
-    output.connect(_QueueSender(q), q)
+    output.connect(q)
     input_.connect(q)
 
 
@@ -143,7 +134,7 @@ def funnel_ports(outputs: list[OutputPort], input_: InputPort, cap: int) -> None
     q: queue.Queue = queue.Queue(maxsize=cap)
     for out in outputs:
         _check_types(out, input_)
-        out.connect(_QueueSender(q), q)
+        out.connect(q)
         input_.connect(q)
 
 
@@ -181,7 +172,7 @@ class _BroadcastRing:
         self._closed = False
         self._cond = threading.Condition()
 
-    def send(self, msg: Message) -> None:
+    def put(self, msg: Message) -> None:
         with self._cond:
             if self._closed:
                 if msg.payload is _SENTINEL:
@@ -206,14 +197,6 @@ class _BroadcastRing:
     def qsize(self) -> int:
         with self._cond:
             return self._len
-
-
-class _RingSender:
-    def __init__(self, ring: _BroadcastRing):
-        self._ring = ring
-
-    def send(self, msg: Message) -> None:
-        self._ring.send(msg)
 
 
 class _RingReceiver:
@@ -242,7 +225,7 @@ class _RingReceiver:
                 )
                 if remaining is not None and remaining <= 0:
                     raise queue.Empty
-                self._ring._cond.wait(remaining if remaining is not None else 0.1)
+                self._ring._cond.wait(remaining)
 
     def qsize(self) -> int:
         with self._ring._cond:
@@ -270,12 +253,12 @@ def broadcast_port(
         for inp in inputs:
             _check_types(output, inp)
             inp.connect(_RingReceiver(ring))
-        output.connect(_RingSender(ring), ring)
+        output.connect(ring)
         return
     for inp in inputs:
         _check_types(output, inp)
         q: queue.Queue = queue.Queue(maxsize=cap)
-        output.connect(_QueueSender(q), q)
+        output.connect(q)
         inp.connect(q)
 
 

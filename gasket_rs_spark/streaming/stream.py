@@ -2,9 +2,22 @@
 
 These run real ``readStream``/``writeStream`` queries — rate source or a
 file-replay of the events table — with watermarks and stateful dedup.
-They're exercised by the pytest streaming smoke tests (the driver's
-oracle gate can't replay a stream, so correctness of the *semantics* is
-carried by the batch twins in ``windows.py``).
+The six ``q_stream_*_pipeline`` witnesses run a real multi-microbatch
+stream and are DuckDB-oracled like any other query (EXACT at all three
+SFs); the outer interval joins, whose null emission rides state
+eviction, are pinned in pytest against their batch sims in
+``windows.py``.
+
+Two seams carry the shared wiring:
+- ``_interval_join(clicks, purchases, horizon, how)``: the watermarked
+  click/purchase sides and the interval condition behind all four
+  ``interval_join_streams*`` variants, which pick only the join type and
+  output columns.
+- ``_staged_stream`` + ``_run_staged``: the staged 4-file events source
+  read one file per microbatch, and the AvailableNow ``foreachBatch``
+  runner whose default per-batch step (``_overwrite_batch``) overwrites
+  the batch's own ``batch_id=N`` sink partition. ``events_file_stream``
+  is a different contract (one file, one data batch) and stays separate.
 
 Reference parity (SURVEY §2.1): a streaming query here is one running
 stage (R18/R19); ``Trigger.AvailableNow`` reproduces WorkSchedule::Done
@@ -18,6 +31,7 @@ import hashlib
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -85,55 +99,15 @@ def deduped_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def interval_join_streams(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = "1 hour"
+def _interval_join(
+    clicks: DataFrame, purchases: DataFrame, horizon: str, how: str
 ) -> DataFrame:
-    """Watermarked stream-stream interval join: each purchase joined to
-    same-user clicks within the preceding hour. Both sides carry
-    watermarks so join state is bounded by the interval + watermark —
-    the streaming face of the as-of/range join family (X8/X9).
-    """
-    c = (
-        clicks.withWatermark("ts", horizon)
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    p = (
-        purchases.withWatermark("ts", horizon)
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}"))
-    )
-    return p.join(c, cond).select("purchase_id", "click_id", "p_user")
-
-
-def interval_join_streams_left_outer(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = "1 hour"
-) -> DataFrame:
-    """LEFT-OUTER watermarked stream-stream interval join: every purchase
-    emits — matched ones with their click(s), unmatched ones with a NULL
-    click once the click-side watermark passes the purchase's event time
-    (no earlier: a qualifying click could still arrive). The
-    unattributed-conversion report a funnel pipeline actually wants.
-
-    Semantics note (why this is a pytest-pinned helper, not a driver
-    witness): Spark emits the null-extended rows on STATE EVICTION,
-    which trails the watermark by up to one microbatch and may withhold
-    the stream tail under AvailableNow — the emitted-null set therefore
-    depends on batch boundaries in a way an engine-independent oracle
-    cannot reproduce row-exactly. The pytest pins the robust contract:
-    matched pairs equal the batch join exactly, and every null row is a
-    genuinely unmatched purchase (tests/test_streaming.py)."""
+    """The one stream-stream interval join behind the four public
+    variants: both sides carry ``withWatermark("ts", horizon)`` and each
+    purchase joins same-user clicks with
+    ``purchase_ts - horizon <= click_ts <= purchase_ts``, so join state
+    is bounded by the interval + watermark. ``how`` is the join type;
+    callers pick the output columns."""
     c = clicks.withWatermark("ts", horizon).select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
@@ -149,7 +123,40 @@ def interval_join_streams_left_outer(
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}"))
     )
-    return p.join(c, cond, "leftOuter").select(
+    return p.join(c, cond, how)
+
+
+def interval_join_streams(
+    clicks: DataFrame, purchases: DataFrame, horizon: str = "1 hour"
+) -> DataFrame:
+    """Watermarked stream-stream interval join: each purchase joined to
+    same-user clicks within the preceding hour. Both sides carry
+    watermarks so join state is bounded by the interval + watermark —
+    the streaming face of the as-of/range join family (X8/X9).
+    """
+    return _interval_join(clicks, purchases, horizon, "inner").select(
+        "purchase_id", "click_id", "p_user"
+    )
+
+
+def interval_join_streams_left_outer(
+    clicks: DataFrame, purchases: DataFrame, horizon: str = "1 hour"
+) -> DataFrame:
+    """LEFT-OUTER watermarked stream-stream interval join: every purchase
+    emits — matched ones with their click(s), unmatched ones with a NULL
+    click once the click-side watermark passes the purchase's event time
+    (no earlier: a qualifying click could still arrive). The
+    unattributed-conversion report a funnel pipeline actually wants.
+
+    This is pytest-pinned, not a driver witness: Spark emits the
+    null-extended rows on STATE EVICTION, which trails the watermark by
+    up to one microbatch and may withhold the stream tail under
+    AvailableNow, so in general the emitted-null set depends on batch
+    boundaries. Under the repo's replay conditions (one file per side,
+    ``events_file_stream``) it is deterministic, and
+    ``windows.q_stream_left_outer_join_sim`` reproduces it bit-for-bit
+    (tests/test_streaming.py)."""
+    return _interval_join(clicks, purchases, horizon, "leftOuter").select(
         "purchase_id", "click_id", "p_user"
     )
 
@@ -172,22 +179,7 @@ def interval_join_streams_full_outer(
     dependent in general); under the repo's replay conditions the
     emission is deterministic and ``windows.q_stream_full_outer_join_sim``
     reproduces it bit-for-bit (tests/test_streaming.py)."""
-    c = clicks.withWatermark("ts", horizon).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.withWatermark("ts", horizon).select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}"))
-    )
-    return p.join(c, cond, "fullOuter").select(
+    return _interval_join(clicks, purchases, horizon, "fullOuter").select(
         "purchase_id",
         "click_id",
         F.coalesce(F.col("p_user"), F.col("c_user")).alias("join_user"),
@@ -212,22 +204,7 @@ def interval_join_streams_right_outer(
     repo's replay conditions the emission is deterministic and
     ``windows.q_stream_right_outer_join_sim`` reproduces it bit-for-bit
     (tests/test_streaming.py)."""
-    c = clicks.withWatermark("ts", horizon).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.withWatermark("ts", horizon).select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}"))
-    )
-    return p.join(c, cond, "rightOuter").select(
+    return _interval_join(clicks, purchases, horizon, "rightOuter").select(
         "purchase_id", "click_id", "c_user"
     )
 
@@ -375,6 +352,47 @@ def _staged_events_scratch(
     return (src, *out)
 
 
+def _staged_stream(spark: SparkSession, src: str) -> DataFrame:
+    """The staged events directory (``_staged_events_scratch``'s ``src``)
+    as a file stream, one file per microbatch — 4 genuine microbatches."""
+    return (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _overwrite_batch(batch_df: DataFrame, batch_id: int, sink: str) -> None:
+    """Write one microbatch to its own ``batch_id=N`` partition of
+    ``sink`` with overwrite. foreachBatch is at-least-once (ADVICE r7),
+    so a redelivered batch replaces its partial write instead of
+    appending a second copy."""
+    batch_df.write.mode("overwrite").parquet(os.path.join(sink, f"batch_id={batch_id}"))
+
+
+def _run_staged(
+    stream: DataFrame,
+    sink: str,
+    ckpt: str,
+    label: str,
+    step: Callable[[DataFrame, int, str], None] = _overwrite_batch,
+) -> None:
+    """Run ``stream`` to completion under ``Trigger.AvailableNow`` —
+    WorkSchedule::Done (framework.rs:81-88) — calling
+    ``step(batch_df, batch_id, sink)`` once per microbatch through
+    ``foreachBatch``. The default step is ``_overwrite_batch``; a custom
+    step must be idempotent per ``batch_id`` the same way."""
+    query = (
+        stream.writeStream.foreachBatch(lambda df, batch_id: step(df, batch_id, sink))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not query.awaitTermination(180):
+        query.stop()
+        raise TimeoutError(f"{label} pipeline exceeded 180s")
+
+
 def q_stream_availablenow_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable REAL streaming witness (judge r6 #5): the events
     table staged as a multi-file directory, replayed through an actual
@@ -389,14 +407,11 @@ def q_stream_availablenow_pipeline(spark: SparkSession, sf_dir: str) -> DataFram
     the oracle recomputes the same filter → hour-bucket → agg straight
     from the events table.
 
-    Exactly-once sink (ADVICE r7): foreachBatch is at-least-once, so each
-    batch OVERWRITES its own ``batch_id=N`` partition directory instead
-    of appending — a retry after a partial write replaces the partial
-    output rather than double-counting it. Scratch reuse (ADVICE r7): one
-    scratch dir per (sf_dir, events mtime), removed atexit; the staged
-    source survives across the bench's min-of-N passes while sink and
-    checkpoint are reset per run, so repeated invocations no longer
-    accumulate full table copies in /tmp.
+    Exactly-once sink and scratch reuse (ADVICE r7): each batch
+    overwrites its own ``batch_id=N`` partition (``_overwrite_batch``),
+    and one scratch dir per (sf_dir, events mtime) keeps the staged
+    source across the bench's min-of-N passes while sink and checkpoint
+    are reset per run (``_staged_events_scratch``).
 
     Unlike every other witness this callable EXECUTES the stream eagerly
     (a streaming query is a job, not a plan); the returned frame is a
@@ -407,39 +422,22 @@ def q_stream_availablenow_pipeline(spark: SparkSession, sf_dir: str) -> DataFram
     the bounded-channel backpressure analogue (messaging.rs:384-391).
     """
     src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "sink", "ckpt")
-    schema = spark.read.parquet(src).schema
 
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Idempotent: overwrite THIS batch's partition directory, so an
-        # at-least-once redelivery replaces a partial write instead of
-        # appending a second copy.
-        (
-            batch_df.where(F.col("event_type").isin("click", "purchase"))
-            .select(
+    def hour_buckets(batch_df: DataFrame, batch_id: int, sink: str) -> None:
+        _overwrite_batch(
+            batch_df.where(F.col("event_type").isin("click", "purchase")).select(
                 "event_id",
                 "event_type",
                 "value",
                 F.expr(
                     "timestamp_seconds(unix_millis(ts) div 1000 div 3600 * 3600)"
                 ).alias("hour"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch_id={batch_id}"))
+            ),
+            batch_id,
+            sink,
         )
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("AvailableNow pipeline exceeded 180s")
-
+    _run_staged(_staged_stream(spark, src), sink, ckpt, "AvailableNow", hour_buckets)
     return (
         spark.read.parquet(sink)
         .groupBy("hour", "event_type")
@@ -474,28 +472,11 @@ def q_stream_sketch_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import quantile_from_sketch, quantile_sketch, quantile_sketch_merge
 
     src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "sk_sink", "sk_ckpt")
-    schema = spark.read.parquet(src).schema
 
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            quantile_sketch(batch_df, "value", ["event_type"])
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch_id={batch_id}"))
-        )
+    def sketch(batch_df: DataFrame, batch_id: int, sink: str) -> None:
+        _overwrite_batch(quantile_sketch(batch_df, "value", ["event_type"]), batch_id, sink)
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("sketch pipeline exceeded 180s")
-
+    _run_staged(_staged_stream(spark, src), sink, ckpt, "sketch", sketch)
     shards = spark.read.parquet(sink).select("event_type", "qbucket", "qcnt")
     merged = quantile_sketch_merge(shards, ["event_type"])
     return quantile_from_sketch(merged, ["event_type"])
@@ -532,7 +513,7 @@ def _incremental_dedup_batch(batch_df: DataFrame, batch_id: int, sink: str) -> N
         fresh = batch_first.join(seen, "h", "left_anti")
     except AnalysisException:
         fresh = batch_first
-    fresh.write.mode("overwrite").parquet(os.path.join(sink, f"batch_id={batch_id}"))
+    _overwrite_batch(fresh, batch_id, sink)
 
 
 def q_stream_incremental_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,24 +535,9 @@ def q_stream_incremental_dedup_pipeline(spark: SparkSession, sf_dir: str) -> Dat
     duplicate ever appended) is pinned in tests/test_streaming.py.
     """
     src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "dd_sink", "dd_ckpt")
-    schema = spark.read.parquet(src).schema
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _incremental_dedup_batch(batch_df, batch_id, sink)
-
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _run_staged(
+        _staged_stream(spark, src), sink, ckpt, "incremental dedup", _incremental_dedup_batch
     )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("incremental dedup pipeline exceeded 180s")
-
     sunk = spark.read.parquet(sink)
     from ..tables import load as _load
 
@@ -599,7 +565,6 @@ def q_stream_static_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..tables import load as _load
 
     src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "sj_sink", "sj_ckpt")
-    schema = spark.read.parquet(src).schema
     static_dim = (
         _load(spark, sf_dir, "events")
         .select("event_type")
@@ -607,28 +572,11 @@ def q_stream_static_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumn("weight", F.length("event_type").cast("double"))
     )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        _staged_stream(spark, src)
         .join(F.broadcast(static_dim), "event_type")  # stream-static join
         .select("event_id", "event_type", "value", "weight")
     )
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("stream-static join pipeline exceeded 180s")
-
+    _run_staged(stream, sink, ckpt, "stream-static join")
     return (
         spark.read.parquet(sink)
         .groupBy("event_type")
@@ -671,13 +619,10 @@ def q_stream_stream_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     the result is batch-split invariant (pair set is microbatching-
     independent, aggregation runs over the union)."""
     src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "ssj_sink", "ssj_ckpt")
-    schema = spark.read.parquet(src).schema
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+            _staged_stream(spark, src)
             .where(F.col("event_type") == event_type)
             .select(
                 F.col("user_id").alias(f"{prefix}_user"),
@@ -699,22 +644,7 @@ def q_stream_stream_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select(
         F.col("p_user").alias("user_id"), "p_id", "c_id", "p_value"
     )
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    query = (
-        joined.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("stream-stream join pipeline exceeded 180s")
-
+    _run_staged(joined, sink, ckpt, "stream-stream join")
     return (
         spark.read.parquet(sink)
         .groupBy("user_id")
@@ -749,14 +679,8 @@ def q_stream_stateful_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``stateful_user_stats_tws``) runs for real, RocksDB store and all,
     in tests/test_streaming.py where conftest guarantees the ordering."""
     src, = _staged_events_scratch(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     run_to_memory_sink(
-        stateful_user_counts(stream),
+        stateful_user_counts(_staged_stream(spark, src)),
         "stateful_pipeline_sink",
         output_mode="update",
     )

@@ -14,6 +14,10 @@ Alignment notes:
 - Watermark / stateful-dedup semantics are simulated with arrival order
   := event_id (the generator emits events in arrival order), which makes
   the streaming drop/keep decision a deterministic window function.
+- The three outer stream-join sims share one seam,
+  ``_interval_join_sim(spark, sf_dir, how)``: the click/purchase sides,
+  the interval condition and the one-sided-guarded watermark scalar.
+  Each sim adds only its emission filter and output columns.
 """
 
 from __future__ import annotations
@@ -175,34 +179,44 @@ def q_stream_dedup_watermark_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LOJ_HORIZON_MS = 3_600_000  # 1 hour, matches interval_join_streams_left_outer
+_JOIN_SIM_HORIZON_MS = 3_600_000  # 1 hour, the interval_join_streams_* default
 
 
-def q_stream_left_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT-OUTER watermarked stream-stream interval join, simulated
-    deterministically in batch (VERDICT r11 #3) — the oracle twin of
-    ``stream.interval_join_streams_left_outer``, which is pytest-only
-    because Spark emits null-extended rows on state EVICTION and the
-    general emitted-null set is batch-boundary-dependent.
+def _interval_join_sim(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The batch half shared by the three outer-join sims, the oracle
+    twins of ``stream.interval_join_streams_{left,full,right}_outer``:
+    purchases ``how``-joined to same-user clicks with
+    ``pts_ms - H <= cts_ms <= pts_ms`` (columns ``pu``/``purchase_id``/
+    ``pts_ms`` and ``cu``/``click_id``/``cts_ms``), crossed with the
+    one-row watermark ``wm_ms``. Each sim adds only its emission filter
+    (its per-side eviction threshold) and its ``select``.
 
-    Under the repo's replay conditions the emission IS deterministic and
-    this query reproduces it bit-for-bit (pinned by
-    tests/test_streaming.py::test_left_outer_join_sim_matches_streaming):
-    each side arrives as ONE data batch (single staged file), so batch 1
-    joins with watermark still at epoch 0 and emits every matched pair;
-    the trailing no-data batch advances the global watermark to
+    Replay conditions. The real outer joins are pytest-only because Spark
+    emits null-extended rows on state EVICTION and the general
+    emitted-null set is batch-boundary-dependent. Under the repo's
+    replay conditions the emission IS deterministic and the sims
+    reproduce it bit-for-bit (pinned by the ``*_join_sim_matches_streaming``
+    tests in tests/test_streaming.py): each side arrives as ONE data
+    batch (single staged file), so batch 1 joins with the watermark still
+    at epoch 0 and emits every matched pair; the trailing no-data batch
+    advances the global watermark to
     wm = min(max click ts, max purchase ts) − horizon (Spark's default
-    min-of-sides multi-watermark policy) and evicts left-side state,
-    null-extending exactly the unmatched purchases with ts < wm. An
-    unmatched purchase newer than wm could still match a future click,
-    so it stays in state and is withheld when the stream ends — on the
-    sf0.001 fixture 195 of 197 unmatched purchases emit and the 2
-    past-wm tail rows do not, on both the real stream and this sim (the
-    equality pin compares the full row sets).
+    min-of-sides multi-watermark policy) and evicts state. Unmatched
+    rows newer than their side's threshold stay in state and are
+    withheld when the stream ends, on both the real stream and the sims
+    (the pins compare full row sets).
 
-    Scale: equi-join on user_id (shuffle on an 8-byte key) with the
-    interval as a residual range predicate; the watermark scalar is one
-    tiny agg broadcast into the plan. No windows, no driver loop.
+    One-sided guard (ADVICE r12): min-of-sides is only meaningful when
+    BOTH sides have produced data — a one-sided fixture would collapse
+    min(mx) to the present side's max and null-extend rows the real
+    stream (global watermark still at epoch 0) would never emit. wm_ms
+    is NULL then: any ``< NULL`` threshold is NULL, so no null-extended
+    row passes a sim's filter.
+
+    Scale: one equi-join on user_id (shuffle on an 8-byte key) with the
+    interval as a residual range predicate + one tiny broadcast
+    watermark scalar — no windows, no driver loop, state bounded by
+    horizon + watermark exactly as the real stream's would be.
     """
     events = load(spark, sf_dir, "events").withColumn(
         "ts_ms", F.expr("unix_millis(ts)")
@@ -217,29 +231,39 @@ def q_stream_left_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("purchase_id"),
         F.col("ts_ms").alias("pts_ms"),
     )
-    # ADVICE r12: min-of-sides is only meaningful when BOTH sides have
-    # produced data — a one-sided fixture would collapse min(mx) to the
-    # present side's max and null-extend rows the real stream (global
-    # watermark still at epoch 0) would never emit. wm_ms = NULL then:
-    # `pts_ms < NULL` is NULL, so no null-extended row passes the filter.
     wm = (
         events.where(F.col("event_type").isin("click", "purchase"))
         .groupBy("event_type")
         .agg(F.max("ts_ms").alias("mx"))
         .agg(
             F.when(
-                F.count("*") == 2, F.min("mx") - F.lit(_LOJ_HORIZON_MS)
+                F.count("*") == 2, F.min("mx") - F.lit(_JOIN_SIM_HORIZON_MS)
             ).alias("wm_ms")
         )
     )
     cond = (
         (F.col("cu") == F.col("pu"))
         & (F.col("cts_ms") <= F.col("pts_ms"))
-        & (F.col("cts_ms") >= F.col("pts_ms") - F.lit(_LOJ_HORIZON_MS))
+        & (F.col("cts_ms") >= F.col("pts_ms") - F.lit(_JOIN_SIM_HORIZON_MS))
     )
+    return p.join(c, cond, how).crossJoin(F.broadcast(wm))
+
+
+def q_stream_left_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT-OUTER watermarked stream-stream interval join, simulated
+    deterministically in batch (VERDICT r11 #3) — the oracle twin of
+    ``stream.interval_join_streams_left_outer`` under the replay
+    conditions in ``_interval_join_sim``.
+
+    Eviction: left-side state only. An unmatched purchase at pts
+    null-extends iff pts < wm — a qualifying click (cts ∈ [pts − horizon,
+    pts]) can no longer arrive once the watermark passes pts. On the
+    sf0.001 fixture 195 of 197 unmatched purchases emit and the 2
+    past-wm tail rows do not, on both the real stream and this sim
+    (tests/test_streaming.py::test_left_outer_join_sim_matches_streaming).
+    """
     return (
-        p.join(c, cond, "left")
-        .crossJoin(F.broadcast(wm))
+        _interval_join_sim(spark, sf_dir, "left")
         .where(F.col("click_id").isNotNull() | (F.col("pts_ms") < F.col("wm_ms")))
         .select("purchase_id", "click_id", F.col("pu").alias("p_user"))
     )
@@ -248,13 +272,12 @@ def q_stream_left_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_full_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL-OUTER watermarked stream-stream interval join, simulated
     deterministically in batch (VERDICT r12 #3) — the oracle twin of
-    ``stream.interval_join_streams_full_outer``, completing the
-    stream-join family next to the left-outer sim above.
+    ``stream.interval_join_streams_full_outer`` under the replay
+    conditions in ``_interval_join_sim``, completing the stream-join
+    family next to the left-outer sim.
 
-    Same replay conditions, same global watermark wm = min-of-sides max
-    event time − horizon; the eviction thresholds differ per side
-    because the interval predicate is asymmetric (click_ts ≤ purchase_ts
-    ≤ click_ts + horizon):
+    Eviction thresholds differ per side because the interval predicate
+    is asymmetric (click_ts ≤ purchase_ts ≤ click_ts + horizon):
 
     - an unmatched PURCHASE at pts null-extends iff pts < wm — a
       qualifying click (cts ∈ [pts − horizon, pts]) can no longer
@@ -263,49 +286,9 @@ def q_stream_full_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     - an unmatched CLICK at cts null-extends iff cts < wm − horizon —
       it could only match purchases with pts ∈ [cts, cts + horizon],
       all below the watermark by then (right-side state eviction
-      mirrors the left, shifted by the horizon).
-
-    Unmatched rows newer than their threshold stay in state and are
-    withheld when the stream ends — on both the real stream and this
-    sim (the equality pin in tests/test_streaming.py compares the full
-    row sets, and the one-sided-input guard from the left-outer sim
-    applies identically: wm is NULL unless both sides produced data).
-
-    Scale: one equi-join on user_id with the interval as a residual
-    range predicate + one broadcast watermark scalar — no windows, no
-    driver loop, state bounded by horizon + watermark exactly as the
-    real stream's would be."""
-    events = load(spark, sf_dir, "events").withColumn(
-        "ts_ms", F.expr("unix_millis(ts)")
-    )
-    c = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("cu"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts_ms").alias("cts_ms"),
-    )
-    p = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts_ms").alias("pts_ms"),
-    )
-    wm = (
-        events.where(F.col("event_type").isin("click", "purchase"))
-        .groupBy("event_type")
-        .agg(F.max("ts_ms").alias("mx"))
-        .agg(
-            F.when(
-                F.count("*") == 2, F.min("mx") - F.lit(_LOJ_HORIZON_MS)
-            ).alias("wm_ms")
-        )
-    )
-    cond = (
-        (F.col("cu") == F.col("pu"))
-        & (F.col("cts_ms") <= F.col("pts_ms"))
-        & (F.col("cts_ms") >= F.col("pts_ms") - F.lit(_LOJ_HORIZON_MS))
-    )
+      mirrors the left, shifted by the horizon)."""
     return (
-        p.join(c, cond, "full")
-        .crossJoin(F.broadcast(wm))
+        _interval_join_sim(spark, sf_dir, "full")
         .where(
             (F.col("click_id").isNotNull() & F.col("purchase_id").isNotNull())
             | (
@@ -314,7 +297,7 @@ def q_stream_full_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             | (
                 F.col("purchase_id").isNull()
-                & (F.col("cts_ms") < F.col("wm_ms") - F.lit(_LOJ_HORIZON_MS))
+                & (F.col("cts_ms") < F.col("wm_ms") - F.lit(_JOIN_SIM_HORIZON_MS))
             )
         )
         .select(
@@ -328,59 +311,21 @@ def q_stream_full_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_right_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIGHT-OUTER watermarked stream-stream interval join, simulated
     deterministically in batch (VERDICT r13 #4) — the oracle twin of
-    ``stream.interval_join_streams_right_outer``, making the
-    interval-join sim family total (inner / left / right / full).
+    ``stream.interval_join_streams_right_outer`` under the replay
+    conditions in ``_interval_join_sim``, making the interval-join sim
+    family total (inner / left / right / full).
 
-    Same replay conditions and global watermark wm = min-of-sides max
-    event time − horizon as the left/full-outer sims. Only the CLICK
-    side null-extends here, at the threshold the full-outer sim derived
-    for right-side state: an unmatched click at cts null-extends iff
-    cts < wm − horizon (it could only match purchases with
-    pts ∈ [cts, cts + horizon], all below the watermark by then);
-    newer unmatched clicks stay in state and are withheld when the
-    stream ends. Pinned bit-equal to the real streaming emission by
-    tests/test_streaming.py::test_right_outer_join_sim_matches_streaming;
-    the one-sided-input guard applies identically (wm NULL unless both
-    sides produced data — no null-extensions then).
-
-    Scale: one equi-join on user_id with the interval as a residual
-    range predicate + one broadcast watermark scalar — no windows, no
-    driver loop, state bounded by horizon + watermark exactly as the
-    real stream's would be."""
-    events = load(spark, sf_dir, "events").withColumn(
-        "ts_ms", F.expr("unix_millis(ts)")
-    )
-    c = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("cu"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts_ms").alias("cts_ms"),
-    )
-    p = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts_ms").alias("pts_ms"),
-    )
-    wm = (
-        events.where(F.col("event_type").isin("click", "purchase"))
-        .groupBy("event_type")
-        .agg(F.max("ts_ms").alias("mx"))
-        .agg(
-            F.when(
-                F.count("*") == 2, F.min("mx") - F.lit(_LOJ_HORIZON_MS)
-            ).alias("wm_ms")
-        )
-    )
-    cond = (
-        (F.col("cu") == F.col("pu"))
-        & (F.col("cts_ms") <= F.col("pts_ms"))
-        & (F.col("cts_ms") >= F.col("pts_ms") - F.lit(_LOJ_HORIZON_MS))
-    )
+    Eviction: only the CLICK side null-extends, at the threshold the
+    full-outer sim derived for right-side state: an unmatched click at
+    cts null-extends iff cts < wm − horizon (it could only match
+    purchases with pts ∈ [cts, cts + horizon], all below the watermark
+    by then). Pinned bit-equal to the real streaming emission by
+    tests/test_streaming.py::test_right_outer_join_sim_matches_streaming."""
     return (
-        p.join(c, cond, "right")
-        .crossJoin(F.broadcast(wm))
+        _interval_join_sim(spark, sf_dir, "right")
         .where(
             F.col("purchase_id").isNotNull()
-            | (F.col("cts_ms") < F.col("wm_ms") - F.lit(_LOJ_HORIZON_MS))
+            | (F.col("cts_ms") < F.col("wm_ms") - F.lit(_JOIN_SIM_HORIZON_MS))
         )
         .select("purchase_id", "click_id", F.col("cu").alias("c_user"))
     )

@@ -11,8 +11,8 @@ documented emission contract:
 
   matched pairs: cu == pu, pts - H <= cts <= pts
   wm           : min(max cts, max pts) - H, NULL if either side empty
-  null purchase: unmatched and pts < wm
-  null click   : unmatched and cts < wm - H      (full-outer only)
+  null purchase: unmatched and pts < wm          (left/full-outer)
+  null click   : unmatched and cts < wm - H      (full/right-outer)
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ def _write_events(tmpdir: str, rows: list[tuple[int, int, str, int]]) -> str:
     return tmpdir
 
 
-def _reference(rows, full_outer: bool):
+def _reference(rows, how: str):
     clicks = [(e, u, t) for e, u, ty, t in rows if ty == "click"]
     purch = [(e, u, t) for e, u, ty, t in rows if ty == "purchase"]
     out = set()
@@ -62,27 +62,27 @@ def _reference(rows, full_outer: bool):
         else None
     )
     if wm is not None:
-        for pid, pu, pts in purch:
-            if pid not in matched_p and pts < wm:
-                out.add((pid, None, pu))
-        if full_outer:
+        if how != "right":
+            for pid, pu, pts in purch:
+                if pid not in matched_p and pts < wm:
+                    out.add((pid, None, pu))
+        if how != "left":
             for cid, cu, cts in clicks:
                 if cid not in matched_c and cts < wm - H_MS:
                     out.add((None, cid, cu))
     return out
 
 
-def _run_sim(spark, sf_dir, full_outer: bool):
-    from gasket_rs_spark.streaming.windows import (
-        q_stream_full_outer_join_sim,
-        q_stream_left_outer_join_sim,
-    )
+def _run_sim(spark, sf_dir, how: str):
+    from gasket_rs_spark.streaming import windows
 
-    fn = q_stream_full_outer_join_sim if full_outer else q_stream_left_outer_join_sim
+    fn, user = {
+        "left": (windows.q_stream_left_outer_join_sim, "p_user"),
+        "full": (windows.q_stream_full_outer_join_sim, "join_user"),
+        "right": (windows.q_stream_right_outer_join_sim, "c_user"),
+    }[how]
     rows = fn(spark, sf_dir).collect()
-    if full_outer:
-        return {(r["purchase_id"], r["click_id"], r["join_user"]) for r in rows}
-    return {(r["purchase_id"], r["click_id"], r["p_user"]) for r in rows}
+    return {(r["purchase_id"], r["click_id"], r[user]) for r in rows}
 
 
 # Each case: (label, rows). Minutes offsets keep the arithmetic readable.
@@ -161,9 +161,9 @@ CASES = [
 
 
 @pytest.mark.parametrize("label,rows", CASES, ids=[c[0] for c in CASES])
-@pytest.mark.parametrize("full_outer", [False, True], ids=["loj", "foj"])
-def test_stream_join_sim_synthetic(spark, tmp_path, label, rows, full_outer):
+@pytest.mark.parametrize("how", ["left", "full", "right"], ids=["loj", "foj", "roj"])
+def test_stream_join_sim_synthetic(spark, tmp_path, label, rows, how):
     sf_dir = _write_events(str(tmp_path), rows)
-    got = _run_sim(spark, sf_dir, full_outer)
-    want = _reference(rows, full_outer)
+    got = _run_sim(spark, sf_dir, how)
+    want = _reference(rows, how)
     assert got == want, (label, sorted(got, key=str), sorted(want, key=str))

@@ -850,3 +850,25 @@ def test_full_outer_join_sim_matches_streaming(spark, sf_dir):
     unmatched_c = ev.where(F.col("event_type") == "click").count() - len(matched_c)
     assert 0 < null_p < unmatched_p
     assert 0 < null_c < unmatched_c
+
+
+def test_real_stream_pipelines_match_duckdb_oracle(spark, sf_dir):
+    """The real-stream witnesses with no other default-lane check run
+    through the differential gate (scripts/verify_local.py) against their
+    DuckDB oracles: each must be EXACT."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    from verify_local import verify
+
+    names = {
+        "stream_availablenow_pipeline",
+        "stream_static_join_pipeline",
+        "stream_stream_join_pipeline",
+        "stream_stateful_pipeline",
+    }
+    results = verify(spark, sf_dir, names)
+    assert {n: r["status"] for n, r in results.items()} == dict.fromkeys(
+        names, "EXACT"
+    )
