@@ -16,23 +16,30 @@ Everything Spark-side is likewise real: the binary column, the metadata
 struct schema, the Arrow-batched ``mapInPandas`` plumbing, batch shapes,
 and partitioning.
 
-Witnesses:
-- ``q_multimodal_meta``: pure-SQL metadata extraction over synthesized
-  binary payloads (oracle-checked EXACT);
-- ``q_multimodal_features``: the ``mapInPandas`` feature-extraction path
-  over raw payload bytes (oracle-checked EXACT — DuckDB recomputes the
-  byte stats from the source text);
-- ``q_multimodal_decode_stats``: full encode→parse round trip through the
-  real containers per modality, stats computed from the *decoded* samples
-  (oracle-checked EXACT — the payload samples are a deterministic
-  function of the text, so DuckDB recomputes them independently).
+The decoded-media witnesses share one seam, ``_media_kernel``. It selects
+the documents (modality test, then length test), projects ``doc_id`` and
+``payload`` (plus ``modality`` when no single modality is fixed), and in
+each Arrow batch packs every payload into its real container, parses it
+back, and hands the :class:`DecodedMedia` to the witness's per-asset
+function ``(doc_id, media, modality) -> list of row tuples`` — one row
+like a mapper, or several like a splitter (resize blocks, frame pairs).
+A witness keeps only its schema, that function and any aggregation
+after the kernel. Means are exact integer sums divided once and snapped
+by ``_snap``, so every witness is oracle-checked EXACT against a DuckDB
+twin that recomputes the samples from the source text (``ORACLES``).
+
+``q_multimodal_features`` keeps its own ``mapInPandas`` (it reads raw
+payload bytes and decodes nothing); ``q_multimodal_meta``,
+``q_multimodal_frame_sample`` and ``q_multimodal_resize_meta`` are pure
+SQL, and ``q_video_shot_segmentation`` aggregates the temporal-diff
+kernel's output.
 """
 
 from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -194,14 +201,8 @@ def build_media_payload(data: bytes, modality: str) -> bytes:
     raise ValueError(f"unknown modality {modality!r}")
 
 
-def decode_payload(payload: bytes, modality: str, fake: bool = False):
-    """Decode a media payload with the pure-Python container parsers.
-
-    Returns a :class:`DecodedMedia`. ``fake=True`` keeps the legacy
-    pass-through (payload bytes unchanged) used by the byte-stats witness.
-    """
-    if fake:
-        return payload
+def decode_payload(payload: bytes, modality: str) -> DecodedMedia:
+    """Decode a media payload with the pure-Python container parsers."""
     if modality == "image":
         w, h, vals, _ = parse_ppm(payload)
         return DecodedMedia("image", 1, w, h, 0, vals)
@@ -220,6 +221,58 @@ def decode_payload(payload: bytes, modality: str, fake: bool = False):
             np.concatenate([f[2] for f in frames]),
         )
     raise ValueError(f"unknown modality {modality!r}")
+
+
+def _snap(x: float, grid: int = 1000000) -> float:
+    """``floor(x * grid + 0.5) / grid`` — the IEEE expression the oracles
+    spell identically (``round()`` implementations disagree on the
+    half-grid).
+
+    Feed it a mean taken as an exact integer sum, then ONE division by
+    the count, then this snap — never a numpy ``mean()``, whose pairwise
+    float summation differs from the oracle's integer-sum-then-divide in
+    the low-order bits.
+    """
+    return math.floor(x * grid + 0.5) / grid
+
+
+def _media_kernel(
+    spark: SparkSession,
+    sf_dir: str,
+    schema: StructType,
+    per_asset: Callable[[int, DecodedMedia, str], list[tuple]],
+    modality: str | None = None,
+    min_len: int = 3,
+) -> DataFrame:
+    """The Arrow-batched decode pass every decoded-media witness runs.
+
+    Selects the documents of ``modality`` (all three when ``None``) whose
+    payload has at least ``min_len`` bytes, then per Arrow batch packs
+    each payload into its real container with ``build_media_payload``,
+    parses it back with ``decode_payload`` and collects
+    ``per_asset(doc_id, media, modality)`` — a list of row tuples in
+    ``schema`` order, one per asset or several. Only those rows cross
+    back; payloads stay partitioned.
+    """
+    docs = with_payload(load(spark, sf_dir, "documents"))
+    keep = F.length("payload") >= min_len
+    cols = ["doc_id", "payload"]
+    if modality is None:
+        cols.append("modality")
+    else:
+        keep = (F.col("modality") == modality) & keep
+    columns = schema.fieldNames()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            mods = pdf["modality"] if modality is None else [modality] * len(pdf)
+            rows = []
+            for doc_id, payload, m in zip(pdf["doc_id"], pdf["payload"], mods):
+                media = decode_payload(build_media_payload(bytes(payload), m), m)
+                rows.extend(per_asset(doc_id, media, m))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return docs.where(keep).select(*cols).mapInPandas(kernel, schema)
 
 
 def with_payload(df: DataFrame) -> DataFrame:
@@ -262,9 +315,10 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads (mapInPandas).
 
     The pattern that matters at 100 TB: payloads stay partitioned, each
-    Arrow batch is decoded in-process, and only the (tiny) feature vectors
-    come back. The fake decoder keeps values deterministic so the oracle
-    can recompute them from the source text.
+    Arrow batch is read in-process, and only the (tiny) feature vectors
+    come back. The byte statistics are taken over the raw payload bytes,
+    so the oracle recomputes them from the source text; a NULL text
+    yields a row of NULL statistics, as in the oracle.
     """
     # Project to exactly the columns the extractor needs BEFORE the Arrow
     # boundary — the metadata struct would otherwise ride along in every
@@ -273,35 +327,23 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "payload", "modality"
     )
 
+    def stats(payload) -> tuple:
+        if payload is None:
+            return (None,) * 4
+        # numpy view over the payload buffer — no interpreter loop over
+        # individual bytes (at 100 TB that loop IS the job's runtime).
+        a = np.frombuffer(payload, dtype=np.uint8)
+        if not a.size:
+            return 0, None, None, None
+        return a.size, int(a[0]), int(a[-1]), _snap(int(a.sum()) / a.size)
+
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            decoded = [
-                decode_payload(p, m, fake=True)
-                for p, m in zip(pdf["payload"], pdf["modality"])
+            rows = [
+                (doc_id, m, *stats(p))
+                for doc_id, p, m in zip(pdf["doc_id"], pdf["payload"], pdf["modality"])
             ]
-            # Byte statistics via numpy views over the payload buffers —
-            # no interpreter loop over individual bytes (at 100 TB the
-            # per-byte Python loop this replaces IS the job's runtime).
-            arrays = [np.frombuffer(b, dtype=np.uint8) for b in decoded]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": [a.size for a in arrays],
-                    "first_byte": [int(a[0]) if a.size else None for a in arrays],
-                    "last_byte": [int(a[-1]) if a.size else None for a in arrays],
-                    "mean_byte": [
-                        # floor(x*1e6+0.5)/1e6: same IEEE expression the
-                        # oracle uses (round() impls disagree on half-grid).
-                        # int(a.sum())/size (not a.mean()): pairwise-
-                        # summation float differs from the oracle's exact
-                        # integer-sum-then-divide on low-order bits.
-                        math.floor(int(a.sum()) / a.size * 1000000 + 0.5) / 1000000
-                        if a.size else None
-                        for a in arrays
-                    ],
-                }
-            )
+            yield pd.DataFrame(rows, columns=FEATURE_SCHEMA.fieldNames())
 
     return docs.mapInPandas(extract, FEATURE_SCHEMA)
 
@@ -332,40 +374,14 @@ def q_multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned, codec work happens per Arrow batch, only fixed-width
     stats rows cross back.
     """
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        F.length("payload") >= 3
-    ).select("doc_id", "payload", "modality")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, modality in zip(
-                pdf["doc_id"], pdf["payload"], pdf["modality"]
-            ):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), modality), modality
-                )
-                vals = media.values
-                # int(sum)/n then floor-snap: identical IEEE expression to
-                # the oracle (see q_multimodal_features mean_byte note).
-                mean = math.floor(
-                    int(vals.sum()) / vals.size * 1000000 + 0.5
-                ) / 1000000
-                rows.append(
-                    (
-                        doc_id,
-                        modality,
-                        vals.size if modality == "audio" else vals.size // 3,
-                        media.n_frames,
-                        mean,
-                        int(vals.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DECODE_STATS_SCHEMA.fields]
-            )
+    def stats(doc_id, media, modality):
+        vals = media.values
+        n_units = vals.size if modality == "audio" else vals.size // 3
+        mean = _snap(int(vals.sum()) / vals.size)
+        return [(doc_id, modality, n_units, media.n_frames, mean, int(vals.max()))]
 
-    return docs.mapInPandas(roundtrip, DECODE_STATS_SCHEMA)
+    return _media_kernel(spark, sf_dir, DECODE_STATS_SCHEMA, stats)
 
 
 CHANNEL_SCHEMA = StructType(
@@ -387,29 +403,13 @@ def q_multimodal_image_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle recomputes the channel means from the text bytes by stride-3
     index selection, so the raster layout (interleaved RGB triplets, not
     planar) is part of what the EXACT match pins."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "image") & (F.length("payload") >= 3)
-    ).select("doc_id", "payload")
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "image"), "image"
-                )
-                px = media.values.reshape(-1, 3).astype(np.int64)
-                n_pix = px.shape[0]
-                means = [
-                    math.floor(int(px[:, c].sum()) / n_pix * 1000000 + 0.5) / 1000000
-                    for c in range(3)
-                ]
-                rows.append((doc_id, n_pix, *means))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CHANNEL_SCHEMA.fields]
-            )
+    def channels(doc_id, media, _):
+        px = media.values.reshape(-1, 3).astype(np.int64)
+        n_pix = px.shape[0]
+        return [(doc_id, n_pix, *(_snap(int(s) / n_pix) for s in px.sum(axis=0)))]
 
-    return docs.mapInPandas(extract, CHANNEL_SCHEMA)
+    return _media_kernel(spark, sf_dir, CHANNEL_SCHEMA, channels, "image")
 
 
 AUDIO_SCHEMA = StructType(
@@ -429,29 +429,13 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic cheap VAD/energy features). Sign changes are strict products
     < 0, so the int16 centering convention ((b-128)*256, exact zero at
     b=128) is part of what the EXACT oracle pins."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "audio") & (F.length("payload") >= 3)
-    ).select("doc_id", "payload")
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "audio"), "audio"
-                )
-                s = media.values.astype(np.int64)
-                n = s.size
-                mean_abs = math.floor(
-                    int(np.abs(s).sum()) / n * 1000000 + 0.5
-                ) / 1000000
-                zc = int(np.sum(s[:-1] * s[1:] < 0))
-                rows.append((doc_id, n, mean_abs, zc))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_SCHEMA.fields]
-            )
+    def features(doc_id, media, _):
+        s = media.values.astype(np.int64)
+        zc = int(np.sum(s[:-1] * s[1:] < 0))
+        return [(doc_id, s.size, _snap(int(np.abs(s).sum()) / s.size), zc)]
 
-    return docs.mapInPandas(extract, AUDIO_SCHEMA)
+    return _media_kernel(spark, sf_dir, AUDIO_SCHEMA, features, "audio")
 
 
 SPECTRUM_SCHEMA = StructType(
@@ -487,47 +471,48 @@ def q_multimodal_audio_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Arrow-batched pass, fixed small output row per asset; the
     quadratic DFT lives only in the oracle.
     """
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "audio") & (F.length("payload") >= 3)
-    ).select("doc_id", "payload")
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "audio"), "audio"
-                )
-                s = media.values.astype(np.float64)
-                mag = np.abs(np.fft.rfft(s))
-                if mag.size > 1:
-                    body = mag[1:]
-                    dom = int(np.argmax(body)) + 1
-                    denom = float(body.sum())
-                    centroid = (
-                        float((np.arange(1, mag.size) * body).sum()) / denom
-                        if denom > 0.0
-                        else 0.0
-                    )
-                else:
-                    dom, centroid = 0, 0.0
-                dom_freq = dom * media.sample_rate / s.size
-                rows.append(
-                    (
-                        doc_id,
-                        s.size,
-                        media.sample_rate,
-                        dom,
-                        math.floor(dom_freq * 10000 + 0.5) / 10000,
-                        math.floor(centroid * 10000 + 0.5) / 10000,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in SPECTRUM_SCHEMA.fields])
+    def spectrum(doc_id, media, _):
+        s = media.values.astype(np.float64)
+        mag = np.abs(np.fft.rfft(s))
+        if mag.size > 1:
+            body = mag[1:]
+            dom = int(np.argmax(body)) + 1
+            denom = float(body.sum())
+            centroid = (
+                float((np.arange(1, mag.size) * body).sum()) / denom
+                if denom > 0.0
+                else 0.0
+            )
+        else:
+            dom, centroid = 0, 0.0
+        dom_freq = _snap(dom * media.sample_rate / s.size, 10000)
+        return [
+            (doc_id, s.size, media.sample_rate, dom, dom_freq, _snap(centroid, 10000))
+        ]
 
-    return docs.mapInPandas(extract, SPECTRUM_SCHEMA)
+    return _media_kernel(spark, sf_dir, SPECTRUM_SCHEMA, spectrum, "audio")
 
 
 _RESIZE_BLOCKS = 8
+
+
+def _block_sums(media: DecodedMedia) -> tuple[np.ndarray, list[int]]:
+    """Per-block RGB sums (8, 3) of a decoded W×1 raster over the
+    ``_RESIZE_BLOCKS`` contiguous blocks [b·p/8, (b+1)·p/8) with integer
+    floor bounds, and the block widths.
+
+    One int64 ``np.add.reduceat`` computes all eight sums exactly. It
+    needs every block non-empty, which the callers' ``min_len = 3 *
+    _RESIZE_BLOCKS`` filter guarantees (p ≥ 8).
+    """
+    p = media.width
+    bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
+    sums = np.add.reduceat(
+        media.values.reshape(p, 3), bounds[:-1], axis=0, dtype=np.int64
+    )
+    return sums, [hi - lo for lo, hi in zip(bounds, bounds[1:])]
+
 
 RESIZE_SCHEMA = StructType(
     [
@@ -552,33 +537,17 @@ def q_multimodal_image_resize_decoded(spark: SparkSession, sf_dir: str) -> DataF
     reconstructs the same bytes from the doc text and block-averages
     with list arithmetic). One Arrow-batched pass; constant 8 rows out
     per asset."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "image")
-        & (F.length("payload") >= 3 * _RESIZE_BLOCKS)
-    ).select("doc_id", "payload")
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "image"), "image"
-                )
-                p = media.width
-                M = media.values.reshape(p, 3).astype(np.int64)
-                bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
-                for b in range(_RESIZE_BLOCKS):
-                    lo, hi = bounds[b], bounds[b + 1]
-                    cnt = hi - lo
-                    sums = M[lo:hi].sum(axis=0)
-                    means = [
-                        math.floor(int(s) / cnt * 1000000 + 0.5) / 1000000
-                        for s in sums
-                    ]
-                    rows.append((doc_id, b, cnt, *means))
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
+    def blocks(doc_id, media, _):
+        sums, widths = _block_sums(media)
+        return [
+            (doc_id, b, cnt, *(_snap(int(s) / cnt) for s in sums[b]))
+            for b, cnt in enumerate(widths)
+        ]
 
-    return docs.mapInPandas(extract, RESIZE_SCHEMA)
+    return _media_kernel(
+        spark, sf_dir, RESIZE_SCHEMA, blocks, "image", 3 * _RESIZE_BLOCKS
+    )
 
 
 AHASH_SCHEMA = StructType(
@@ -603,32 +572,19 @@ def q_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a groupBy on the hash — the same shuffle shape as exact text
     dedup. A production variant widens to 64-bit aHash + banded Hamming
     join (the SimHash machinery in dedup.py applies unchanged)."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "image")
-        & (F.length("payload") >= 3 * _RESIZE_BLOCKS)
-    ).select("doc_id", "payload")
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "image"), "image"
-                )
-                p = media.width
-                M = media.values.reshape(p, 3).astype(np.int64)
-                total_mean = M.sum() / (3 * p)
-                bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
-                h = 0
-                for b in range(_RESIZE_BLOCKS):
-                    lo, hi = bounds[b], bounds[b + 1]
-                    block_mean = M[lo:hi].sum() / (3 * (hi - lo))
-                    if block_mean > total_mean:
-                        h |= 1 << b
-                rows.append((doc_id, h))
-            yield pd.DataFrame(rows, columns=[f.name for f in AHASH_SCHEMA.fields])
+    def ahash(doc_id, media, _):
+        sums, widths = _block_sums(media)
+        total_mean = sums.sum() / (3 * media.width)
+        h = 0
+        for b, (s, w) in enumerate(zip(sums.sum(axis=1), widths)):
+            if s / (3 * w) > total_mean:
+                h |= 1 << b
+        return [(doc_id, h)]
 
-    hashed = docs.mapInPandas(hashes, AHASH_SCHEMA)
+    hashed = _media_kernel(
+        spark, sf_dir, AHASH_SCHEMA, ahash, "image", 3 * _RESIZE_BLOCKS
+    )
     return (
         hashed.groupBy("ahash")
         .agg(F.count("*").alias("n_images"), F.min("doc_id").alias("rep_doc"))
@@ -658,36 +614,19 @@ def q_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched decode pass and hash-groupBy shuffle shape as
     q_image_ahash_dedup; the same 64-bit + banded-Hamming production
     widening applies."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "image")
-        & (F.length("payload") >= 3 * _RESIZE_BLOCKS)
-    ).select("doc_id", "payload")
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "image"), "image"
-                )
-                p = media.width
-                M = media.values.reshape(p, 3).astype(np.int64)
-                bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
-                sums = [
-                    int(M[bounds[b]:bounds[b + 1]].sum())
-                    for b in range(_RESIZE_BLOCKS)
-                ]
-                widths = [
-                    bounds[b + 1] - bounds[b] for b in range(_RESIZE_BLOCKS)
-                ]
-                h = 0
-                for b in range(_RESIZE_BLOCKS - 1):
-                    if sums[b] * widths[b + 1] > sums[b + 1] * widths[b]:
-                        h |= 1 << b
-                rows.append((doc_id, h))
-            yield pd.DataFrame(rows, columns=[f.name for f in DHASH_SCHEMA.fields])
+    def dhash(doc_id, media, _):
+        sums, widths = _block_sums(media)
+        S = sums.sum(axis=1).tolist()
+        h = 0
+        for b in range(_RESIZE_BLOCKS - 1):
+            if S[b] * widths[b + 1] > S[b + 1] * widths[b]:
+                h |= 1 << b
+        return [(doc_id, h)]
 
-    hashed = docs.mapInPandas(hashes, DHASH_SCHEMA)
+    hashed = _media_kernel(
+        spark, sf_dir, DHASH_SCHEMA, dhash, "image", 3 * _RESIZE_BLOCKS
+    )
     return (
         hashed.groupBy("dhash")
         .agg(F.count("*").alias("n_images"), F.min("doc_id").alias("rep_doc"))
@@ -710,42 +649,26 @@ def q_multimodal_video_temporal_diff(spark: SparkSession, sf_dir: str) -> DataFr
     """Temporal motion features over DECODED video: mean absolute
     pixel-value difference between consecutive frames of each
     concatenated-PPM stream — the scene-change / static-clip signal a
-    video curation pipeline thresholds on. Frames are re-parsed from the
-    container (sizes vary on the last slice), each consecutive pair is
-    compared over the common prefix of RGB values, and the integer
-    absolute-difference sum is floor-snapped — EXACT-oracled by a DuckDB
-    twin that recomputes the same frame boundaries with list arithmetic
-    over the reconstructed bytes."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "video") & (F.length("payload") >= 6)
-    ).select("doc_id", "payload")
+    video curation pipeline thresholds on. ``build_media_payload`` gives
+    every frame but the last the first frame's pixel count, so the
+    decoded raster splits back into frames at multiples of it (sizes
+    vary on the last slice); each consecutive pair is compared over the
+    common prefix of RGB values, and the integer absolute-difference sum
+    is floor-snapped — EXACT-oracled by a DuckDB twin that recomputes
+    the same frame boundaries with list arithmetic over the
+    reconstructed bytes."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                stream = build_media_payload(bytes(payload), "video")
-                frames, pos = [], 0
-                while pos < len(stream):
-                    _, _, vals, pos = parse_ppm(stream, pos)
-                    frames.append(vals.astype(np.int64))
-                for k in range(len(frames) - 1):
-                    a, b = frames[k], frames[k + 1]
-                    m = min(a.size, b.size)
-                    if m == 0:
-                        continue
-                    total = int(np.abs(a[:m] - b[:m]).sum())
-                    rows.append(
-                        (
-                            doc_id,
-                            k,
-                            m,
-                            math.floor(total / m * 1000000 + 0.5) / 1000000,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in TEMPORAL_SCHEMA.fields])
+    def diffs(doc_id, media, _):
+        vals = media.values.astype(np.int64)
+        step = media.width * media.height * 3
+        frames = np.split(vals, range(step, vals.size, step))
+        rows = []
+        for k, (a, b) in enumerate(zip(frames, frames[1:])):
+            m = min(a.size, b.size)
+            rows.append((doc_id, k, m, _snap(int(np.abs(a[:m] - b[:m]).sum()) / m)))
+        return rows
 
-    return docs.mapInPandas(extract, TEMPORAL_SCHEMA)
+    return _media_kernel(spark, sf_dir, TEMPORAL_SCHEMA, diffs, "video", 6)
 
 
 _N_FRAMES = 4

@@ -1,13 +1,10 @@
 """DataFrame pipeline layer: lazy fusion, observation metrics, retrying
-actions, funnel/tee composition, and the multimodal decode stub."""
+actions, funnel/tee composition."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
-from gasket_rs_spark.operators.multimodal import decode_payload
 from gasket_rs_spark.pipeline.dataframe_pipeline import DFPipeline, funnel, tee
 from gasket_rs_spark.pipeline.metrics import render_prometheus
 from gasket_rs_spark.pipeline.retries import RetryPolicy
@@ -72,13 +69,3 @@ def test_prometheus_rendering():
     text = render_prometheus({"s1": {"tick_count": 3, "rows": 10.0}})
     assert 'tick_count{stage="s1"} 3' in text
     assert 'rows{stage="s1"} 10.0' in text
-
-
-def test_decode_rejects_garbage_and_keeps_passthrough():
-    """Since round 7 ``decode_payload`` is a real container parser — junk
-    bytes fail with a parse error (not NotImplementedError), and the
-    legacy fake=True pass-through is preserved for the byte-stats
-    witness."""
-    with pytest.raises(ValueError, match="not a P6"):
-        decode_payload(b"xx", "image")
-    assert decode_payload(b"xx", "image", fake=True) == b"xx"

@@ -1,11 +1,20 @@
-"""Pure-Python media codec pins (no Spark): golden byte vectors for the
-PPM / WAV / concatenated-PPM parsers, round-trip identity, and the
-container robustness cases (comments, extra RIFF chunks, truncation).
+"""Multimodal decode family: media codec pins and the decoded witnesses.
 
-These lock the byte-level container grammar independently of the
-oracle-checked ``multimodal_decode_stats`` witness, so a codec regression
-is localized to a 1-ms test instead of a differential mismatch.
+The pure-Python pins (no Spark) cover golden byte vectors for the PPM /
+WAV / concatenated-PPM parsers, round-trip identity, and the container
+robustness cases (comments, extra RIFF chunks, truncation, garbage
+bytes). They lock the byte-level container grammar independently of the
+oracle-checked witnesses, so a codec regression is localized to a 1-ms
+test instead of a differential mismatch.
+
+The Spark tests cover the witnesses built on the ``_media_kernel`` decode
+seam and ``q_multimodal_features``: DuckDB-oracle EXACT checks, the
+sine-wave spectrum physics, size-guard boundaries, dHash and shot
+segmentation consistency, and NULL payloads.
 """
+
+import math
+from collections import defaultdict
 
 import numpy as np
 import pytest
@@ -112,8 +121,11 @@ def test_video_framing_small_inputs():
     assert media.values.tolist() == list(range(15))
 
 
-def test_fake_passthrough_still_supported():
-    assert decode_payload(b"xyz", "image", fake=True) == b"xyz"
+def test_decode_rejects_garbage():
+    """Since round 7 ``decode_payload`` is a real container parser — junk
+    bytes fail with a parse error (not NotImplementedError)."""
+    with pytest.raises(ValueError, match="not a P6"):
+        decode_payload(b"xx", "image")
 
 
 from hypothesis import given, settings
@@ -209,3 +221,138 @@ def test_resize_and_temporal_boundary_payloads(spark):
     assert len(frames) == 2 and all(f.size == 3 for f in frames)
     diff = np.abs(frames[0].astype(int) - frames[1].astype(int)).mean()
     assert diff == 3.0  # bytes 0,1,2 vs 3,4,5
+
+
+def test_video_shot_segmentation_consistency(spark, sf_dir):
+    from gasket_rs_spark.operators.multimodal import (
+        q_multimodal_video_temporal_diff,
+        q_video_shot_segmentation,
+    )
+
+    diffs = defaultdict(list)
+    for r in q_multimodal_video_temporal_diff(spark, sf_dir).collect():
+        diffs[r["doc_id"]].append(math.floor(r["mean_abs_diff"] * 1e6 + 0.5))
+    want = {}
+    for doc, ds in diffs.items():
+        cuts = sum(1 for d in ds if d * len(ds) > sum(ds))
+        want[doc] = (
+            len(ds) + 1,
+            cuts,
+            cuts + 1,
+            sum(ds) // len(ds),
+            max(ds),
+        )
+    got = {
+        r["doc_id"]: (
+            r["n_frames"],
+            r["n_cuts"],
+            r["n_shots"],
+            r["mean_d6"],
+            r["max_d6"],
+        )
+        for r in q_video_shot_segmentation(spark, sf_dir).collect()
+    }
+    assert got == want
+    # a single-pair clip can never cut (d*1 > d is false)
+    assert all(w[1] == 0 for doc, w in want.items() if w[0] == 2)
+
+
+def test_dhash_brightness_invariance_property(spark, sf_dir):
+    """dHash's reason to exist: adding a constant to every pixel leaves
+    the hash unchanged (aHash can flip). Checked on the kernel math."""
+    from gasket_rs_spark.operators.multimodal import _RESIZE_BLOCKS
+
+    def dhash(pixels):
+        p = len(pixels) // 3
+        bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
+        sums = [
+            sum(pixels[3 * bounds[b]: 3 * bounds[b + 1]])
+            for b in range(_RESIZE_BLOCKS)
+        ]
+        widths = [bounds[b + 1] - bounds[b] for b in range(_RESIZE_BLOCKS)]
+        h = 0
+        for b in range(_RESIZE_BLOCKS - 1):
+            if sums[b] * widths[b + 1] > sums[b + 1] * widths[b]:
+                h |= 1 << b
+        return h
+
+    base = [((i * 37) % 200) for i in range(3 * 40)]
+    shifted = [x + 55 for x in base]
+    assert dhash(base) == dhash(shifted)
+
+
+def test_dhash_groups_match_recount(spark, sf_dir):
+    from gasket_rs_spark.operators.multimodal import q_image_dhash_dedup
+
+    rows = q_image_dhash_dedup(spark, sf_dir).collect()
+    assert rows
+    assert all(r["n_images"] >= 2 for r in rows)
+    assert all(0 <= r["dhash"] < 128 for r in rows)
+
+
+def test_features_null_payload_matches_oracle(spark, tmp_path):
+    """A NULL text yields a row of NULL byte statistics, as in the DuckDB
+    oracle (the kernel once crashed on ``np.frombuffer(None)``)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gasket_rs_spark.operators.multimodal import ORACLES, q_multimodal_features
+
+    texts = ["hello world", None, "abc", "Zebra crossing 42"]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "lang": ["en"] * len(texts),
+                "source": ["web"] * len(texts),
+                "n_chars": pa.array([len(t or "") for t in texts], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    cols = ["doc_id", "modality", "n_bytes", "first_byte", "last_byte", "mean_byte"]
+    got = sorted(
+        tuple(r[c] for c in cols)
+        for r in q_multimodal_features(spark, str(tmp_path)).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'documents.parquet'}')"
+    )
+    rel = con.execute(ORACLES["multimodal_features"])
+    names = [d[0] for d in rel.description]
+    want = sorted(tuple(dict(zip(names, r))[c] for c in cols) for r in rel.fetchall())
+    con.close()
+    assert got == want
+    assert got[1] == (1, "audio", None, None, None, None)
+
+
+def test_decode_kernel_witnesses_match_duckdb_oracle(spark, sf_dir):
+    """The witnesses on the ``_media_kernel`` decode seam, plus
+    ``multimodal_features``, run through the differential gate
+    (scripts/verify_local.py) against their DuckDB oracles: each must be
+    EXACT."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    from verify_local import verify
+
+    names = {
+        "multimodal_decode_stats",
+        "multimodal_image_channels",
+        "multimodal_audio_features",
+        "multimodal_audio_spectrum",
+        "multimodal_image_resize_decoded",
+        "image_ahash_dedup",
+        "image_dhash_dedup",
+        "multimodal_video_temporal_diff",
+        "multimodal_features",
+    }
+    results = verify(spark, sf_dir, names)
+    assert {n: r["status"] for n, r in results.items()} == dict.fromkeys(
+        names, "EXACT"
+    )

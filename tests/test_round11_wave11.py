@@ -1,5 +1,5 @@
 """Property pins for the round-11 wave-11 operators (PSI drift,
-Kaplan-Meier survival, video shot segmentation)."""
+Kaplan-Meier survival)."""
 
 from __future__ import annotations
 
@@ -102,37 +102,3 @@ def test_kaplan_meier_matches_pure_python(spark, sf_dir):
     vals = [want[b][2] for b in sorted(want)]
     assert vals == sorted(vals, reverse=True)
     assert all(0 <= v <= 1_000_000 for v in vals)
-
-
-def test_video_shot_segmentation_consistency(spark, sf_dir):
-    from gasket_rs_spark.operators.multimodal import (
-        q_multimodal_video_temporal_diff,
-        q_video_shot_segmentation,
-    )
-
-    diffs = defaultdict(list)
-    for r in q_multimodal_video_temporal_diff(spark, sf_dir).collect():
-        diffs[r["doc_id"]].append(math.floor(r["mean_abs_diff"] * 1e6 + 0.5))
-    want = {}
-    for doc, ds in diffs.items():
-        cuts = sum(1 for d in ds if d * len(ds) > sum(ds))
-        want[doc] = (
-            len(ds) + 1,
-            cuts,
-            cuts + 1,
-            sum(ds) // len(ds),
-            max(ds),
-        )
-    got = {
-        r["doc_id"]: (
-            r["n_frames"],
-            r["n_cuts"],
-            r["n_shots"],
-            r["mean_d6"],
-            r["max_d6"],
-        )
-        for r in q_video_shot_segmentation(spark, sf_dir).collect()
-    }
-    assert got == want
-    # a single-pair clip can never cut (d*1 > d is false)
-    assert all(w[1] == 0 for doc, w in want.items() if w[0] == 2)

@@ -1,5 +1,5 @@
 """Property pins for the round-11 wave-16 operators (KMV sketch,
-temporal SCD2 join, image dHash)."""
+temporal SCD2 join)."""
 
 from __future__ import annotations
 
@@ -92,36 +92,3 @@ def test_temporal_join_scd2_matches_pure_python(spark, sf_dir):
     assert sum(c for c, _, _ in want.values()) == sum(
         1 for _, _, et, _, _ in rows if et == "click"
     )
-
-
-def test_dhash_brightness_invariance_property(spark, sf_dir):
-    """dHash's reason to exist: adding a constant to every pixel leaves
-    the hash unchanged (aHash can flip). Checked on the kernel math."""
-    from gasket_rs_spark.operators.multimodal import _RESIZE_BLOCKS
-
-    def dhash(pixels):
-        p = len(pixels) // 3
-        bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
-        sums = [
-            sum(pixels[3 * bounds[b]: 3 * bounds[b + 1]])
-            for b in range(_RESIZE_BLOCKS)
-        ]
-        widths = [bounds[b + 1] - bounds[b] for b in range(_RESIZE_BLOCKS)]
-        h = 0
-        for b in range(_RESIZE_BLOCKS - 1):
-            if sums[b] * widths[b + 1] > sums[b + 1] * widths[b]:
-                h |= 1 << b
-        return h
-
-    base = [((i * 37) % 200) for i in range(3 * 40)]
-    shifted = [x + 55 for x in base]
-    assert dhash(base) == dhash(shifted)
-
-
-def test_dhash_groups_match_recount(spark, sf_dir):
-    from gasket_rs_spark.operators.multimodal import q_image_dhash_dedup
-
-    rows = q_image_dhash_dedup(spark, sf_dir).collect()
-    assert rows
-    assert all(r["n_images"] >= 2 for r in rows)
-    assert all(0 <= r["dhash"] < 128 for r in rows)
